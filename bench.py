@@ -1,7 +1,9 @@
 #!/usr/bin/env python
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line with per-query wall-clock seconds.
+ONE JSON line with per-query wall-clock seconds.  Without
+$SPARK_GRAFT_CPUS the session uses every core this process may run on
+(`session.default_cpus`).
 
 Queries are fully executed via the `noop` sink (all partitions
 materialized, nothing collected to the driver).

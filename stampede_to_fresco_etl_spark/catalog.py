@@ -21,6 +21,7 @@ bit-for-bit between Spark and DuckDB):
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -1110,7 +1111,9 @@ def _embedding_pairs_shared(spark, sf_dir):
 
 def warm_shared_frames(spark, sf_dir) -> list:
     """Materialize every cross-query shared frame (the doc-token
-    projection and the four pair-stage caches) and return them.
+    projection and the four pair-stage caches) and every
+    snapshot-artifact build (index_store: bands / IVF / postings /
+    fps / PQ codes), and return the shared frames.
 
     Bench protocol hook: the shared frames are the only persisted
     blocks whose lifetime legitimately spans queries, so a timing
@@ -1120,34 +1123,62 @@ def warm_shared_frames(spark, sf_dir) -> list:
     whichever family query happens to re-materialize it after an
     async free — r7 bench runs attributed the same ~4 s to d7 in one
     run and d6 in the next (BENCH attribution noise, not a plan
-    change).  At 100 TB the analogue is the nightly signals-table
-    refresh: built once per corpus snapshot, never on a query's
-    critical path."""
-    frames = [
-        _doc_token_frame(spark, sf_dir),
-        _jaccard_pairs_005(spark, sf_dir),
-        _jaccard_pairs_03(spark, sf_dir),
-        _minhash_pairs_shared(spark, sf_dir),
-        _embedding_pairs_shared(spark, sf_dir),
+    change).  The artifact builds are the same class of state: they
+    are EAGER side effects of constructing d15/v16/x57/d16/v17's
+    plans, so calling those functions (without executing the probes)
+    charges them here and every later call measures the
+    steady-state probe.  At 100 TB the analogue is the nightly
+    signals-table refresh: built once per corpus snapshot, never on
+    a query's critical path.
+
+    The ten builds (each frame built and counted; each artifact
+    construct) are independent, and each is mostly one-task jobs and
+    py4j round trips, so they run concurrently: one thread
+    per build, each wrapped in `inheritable_thread_target` so its
+    jobs keep the caller's job group and local properties.  The
+    input tables they share are loaded on the calling thread first,
+    so every build reads the same cached plan objects.  The first
+    failing build's exception is re-raised once all have finished."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    load(spark, sf_dir, "documents")
+    load(spark, sf_dir, "embeddings")
+    load_spread(spark, sf_dir, "documents", key="doc_id")
+
+    def counted(build):
+        def run():
+            frame = build(spark, sf_dir)
+            frame.count()
+            return frame
+
+        return run
+
+    builds = [
+        counted(_doc_token_frame),
+        counted(_jaccard_pairs_005),
+        counted(_jaccard_pairs_03),
+        counted(_minhash_pairs_shared),
+        counted(_embedding_pairs_shared),
+    ] + [
+        functools.partial(REGISTRY[name][0], spark, sf_dir)
+        for name in (
+            "d15_incremental_dedup",
+            "v16_incremental_ann",
+            "x57_bm25_stored_index",
+            "d16_incremental_exact_dedup",
+            "v17_pq_adc_topk",
+        )
     ]
-    for f in frames:
-        f.count()
-    # snapshot-artifact builds (index_store: bands / IVF / postings /
-    # fps / PQ codes) are the same class of cross-query state as the
-    # shared frames — built once per corpus snapshot, never on a
-    # query's critical path.  The builds are EAGER side effects of
-    # constructing these queries' plans, so calling the functions
-    # (without executing the probes) charges them to the warm phase;
-    # every timed call after this measures the steady-state probe.
-    for name in (
-        "d15_incremental_dedup",
-        "v16_incremental_ann",
-        "x57_bm25_stored_index",
-        "d16_incremental_exact_dedup",
-        "v17_pq_adc_topk",
-    ):
-        REGISTRY[name][0](spark, sf_dir)
-    return frames
+    # one wrap per build: each captures its own copy of the caller's
+    # local properties, so no two threads share one mutable set
+    with ThreadPoolExecutor(max_workers=len(builds)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(b)) for b in builds
+        ]
+    # leaving the block waited for every build
+    return [f.result() for f in futures][:5]
 
 
 def q_token_stats(spark, sf_dir):
@@ -8893,7 +8924,14 @@ def _med_mad_by_type(spark, sf_dir):
     # execution; VALUES is a LocalTableScan of literals, keeping the
     # consumers construct-pure.  event_type values are controlled
     # identifiers; the quote-escape below keeps the literal form
-    # total anyway.
+    # total anyway.  No rows (no non-null value): `FROM VALUES` with
+    # no tuples does not parse, so return the empty typed relation.
+    if not rows:
+        return spark.range(0).selectExpr(
+            "CAST(NULL AS STRING) AS event_type",
+            "CAST(NULL AS BIGINT) AS med2",
+            "CAST(NULL AS BIGINT) AS mad2",
+        )
     vals = ",".join(
         "('{}',{},{})".format(str(t).replace("'", "''"), m, d)
         for t, m, d in rows
@@ -17256,6 +17294,16 @@ def q_kmeans_refine(spark, sf_dir):
     cached = _KM_CACHE.get(ck)
     if cached is None:
         seeds = S.seed_centroids(emb, "vec_id", "v", _KM_CELLS)
+        if not seeds:
+            # an empty corpus has no cells: the centroid literals
+            # would be untyped empty arrays and the iter-1 counts a
+            # `FROM VALUES` with no tuples, neither of which analyzes
+            return spark.range(0).selectExpr(
+                "CAST(NULL AS BIGINT) AS cell",
+                "CAST(NULL AS BIGINT) AS n_iter1",
+                "CAST(NULL AS BIGINT) AS n_iter2",
+                "CAST(NULL AS DOUBLE) AS sse",
+            )
         c0 = F.array(
             *[F.array(*[F.lit(x) for x in ctr]) for ctr in seeds]
         )
@@ -17322,7 +17370,8 @@ def q_kmeans_refine(spark, sf_dir):
     # evaluation re-ran a Python-worker job on EVERY execution (the
     # v17-LUT pathology); VALUES plans as a LocalTableScan of
     # literals — no Python worker, and v14 becomes construct-pure
-    # (plan-memoized).
+    # (plan-memoized).  `n1_rows` is non-empty here: an empty corpus
+    # returned above.
     n1_vals = ",".join(f"({c},{n})" for c, n in sorted(n1_rows))
     n1 = spark.sql(
         f"SELECT CAST(c AS BIGINT) AS cell, CAST(n AS BIGINT) AS "
@@ -21118,7 +21167,8 @@ def q_compacted_exact_probe(spark, sf_dir):
         f"{_SCRATCH}/index_store/exact_fp_compacted/"
         f"{index_store._key(sf_dir)}"
     )
-    if not index_store._already_materialized(spark, path):
+
+    def write():
         for i in range(3):
             apply_exact_fp_batch(
                 spark,
@@ -21127,7 +21177,8 @@ def q_compacted_exact_probe(spark, sf_dir):
                 path,
             )
         index_store.compact_index(spark, path)
-        index_store._mark_materialized(spark, path)
+
+    index_store.materialize_once(spark, path, write, fresh=False)
 
     # reader-keyed probe-plan memo (r13 session 2): growth via
     # `apply_exact_fp_batch` pops the cached reader and the plan
@@ -21790,8 +21841,8 @@ def q_tombstoned_exact_probe(spark, sf_dir):
         f"{_SCRATCH}/index_store/exact_fp_tombstoned/"
         f"{index_store._key(sf_dir)}"
     )
-    if not index_store._already_materialized(spark, path):
-        index_store._fresh_dir(spark, path)
+
+    def write():
         docs.filter(is_idx).groupBy(
             F.md5("text").alias("fp")
         ).agg(F.count("*").cast("long").alias("n_docs")).write.mode(
@@ -21806,7 +21857,8 @@ def q_tombstoned_exact_probe(spark, sf_dir):
             1,
         )
         index_store.compact_index(spark, path, tombstone_keys=["fp"])
-        index_store._mark_materialized(spark, path)
+
+    index_store.materialize_once(spark, path, write)
 
     # reader-keyed probe-plan memo (r13 session 2): safe against new
     # delete waves because `apply_deletes_batch` pops the artifact's
@@ -22976,8 +23028,8 @@ def q_bm25_after_erase(spark, sf_dir):
         f"{base}/doclen",
         f"{base}/totals",
     )
-    if not index_store._already_materialized(spark, base):
-        index_store._fresh_dir(spark, base)
+
+    def write():
         toks = docs.select(
             "doc_id",
             F.explode(F.split(F.trim("text"), r"\s+")).alias("token"),
@@ -23011,7 +23063,8 @@ def q_bm25_after_erase(spark, sf_dir):
         index_store.erase_entities_compact(
             spark, fams, totals_dir=totals
         )
-        index_store._mark_materialized(spark, base)
+
+    index_store.materialize_once(spark, base, write)
     # same probe-plan memo shape as x57, keyed to the erase base's
     # three cached readers (r13)
     return _cached_probe_plan(
@@ -23101,8 +23154,8 @@ def q_entity_erase_audit(spark, sf_dir):
     ann_tagged = f"{base}/ann_tr"
     fams["ann"] = [fams["ann"], ann_tagged]
     totals_dir, derived_dir = f"{base}/totals", f"{base}/ivfpq"
-    if not index_store._already_materialized(spark, base):
-        index_store._fresh_dir(spark, base)
+
+    def write():
         # --- bootstrap every family (the snapshot batch_id=0 form
         # each grow daemon maintains) ---
         docs.groupBy(F.md5("text").alias("fp")).agg(
@@ -23217,7 +23270,8 @@ def q_entity_erase_audit(spark, sf_dir):
             .partitionBy("cell")
             .parquet(derived_dir)
         )
-        index_store._mark_materialized(spark, base)
+
+    index_store.materialize_once(spark, base, write)
 
     def fam_row(name, df, key_col):
         key = (
@@ -23530,12 +23584,13 @@ def _x66_corpus_dir(spark, sf_dir) -> str:
         f"{_SCRATCH}/index_store/sep_corpus/"
         f"{index_store._key(sf_dir)}"
     )
-    if not index_store._already_materialized(spark, base):
-        index_store._fresh_dir(spark, base)
+
+    def write():
         _x66_corpus(spark, sf_dir).write.mode("overwrite").parquet(
             base
         )
-        index_store._mark_materialized(spark, base)
+
+    index_store.materialize_once(spark, base, write)
     return base
 
 

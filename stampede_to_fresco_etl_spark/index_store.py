@@ -32,12 +32,26 @@ Freshness: the first touch in a Spark session overwrites the
 artifact (so a regenerated testdata dir can never leak a stale index
 across sessions); every later touch in the same session reuses the
 parquet — the steady-state read path.
+
+Thread safety: builders may be called from several threads at once
+(`catalog.warm_shared_frames` runs its artifact builds concurrently).
+
+- Every builder goes through `materialize_once`, which runs check →
+  `_fresh_dir` → write → `_mark_materialized` under a lock for that
+  artifact path, so two first touches of one artifact build it once
+  and never delete each other's write.
+- Every scan of a module cache dict (`_IVFPQ_READ_CACHE`,
+  `_MATERIALIZED`) iterates a ``list(...)`` snapshot, so a key another
+  thread inserts mid-scan cannot raise "dictionary changed size
+  during iteration".
 """
 
 from __future__ import annotations
 
 import os
 import re
+import threading
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -171,15 +185,41 @@ def _mark_materialized(spark: SparkSession, path: str) -> None:
     # a (re)build just landed: any cached reader DataFrame holds the
     # OLD file listing — drop it, including readers of SUBTREE dirs
     # (guard-cached family readers under an audit base, r12)
-    app = spark.sparkContext.applicationId
-    _IVFPQ_READ_CACHE.pop((app, _ckey(path)), None)
-    pre = _ckey(path) + "/"
-    for k in [
-        k
-        for k in _IVFPQ_READ_CACHE
-        if k[0] == app and k[1].startswith(pre)
-    ]:
-        _IVFPQ_READ_CACHE.pop(k, None)
+    invalidate_readers(spark, path)
+
+
+#: canonical artifact path -> the lock `materialize_once` holds across
+#: that artifact's check → `_fresh_dir` → write → `_mark_materialized`
+_BUILD_LOCKS: dict[str, threading.Lock] = {}
+_BUILD_LOCKS_GUARD = threading.Lock()
+
+
+def materialize_once(
+    spark: SparkSession,
+    path: str,
+    write: Callable[[], None],
+    fresh: bool = True,
+) -> None:
+    """Build the artifact at `path` once per Spark session: unless
+    this session already built it, clear the tree (`_fresh_dir`, when
+    `fresh`), run `write()`, and set the session flag.  The steps run
+    under a per-path lock, so two threads first-touching one artifact
+    build it once: the second waits and then finds the flag set.  The
+    flag is set only after `write()` returns, so a failed build leaves
+    it unset and the next touch rebuilds.  Pass ``fresh=False`` when
+    `write()` itself replaces the whole tree (an overwrite of `path`)
+    or builds it through the growth verbs."""
+    if _already_materialized(spark, path):
+        return
+    with _BUILD_LOCKS_GUARD:
+        lock = _BUILD_LOCKS.setdefault(_ckey(path), threading.Lock())
+    with lock:
+        if _already_materialized(spark, path):
+            return
+        if fresh:
+            _fresh_dir(spark, path)
+        write()
+        _mark_materialized(spark, path)
 
 
 def _fresh_dir(spark: SparkSession, path: str) -> str:
@@ -205,14 +245,7 @@ def _fresh_dir(spark: SparkSession, path: str) -> str:
     # the tree is about to vanish: drop any cached reader of it or
     # of a subdir (belt-and-braces — the materialization flag gating
     # already prevents caching a path this session hasn't built)
-    app = spark.sparkContext.applicationId
-    pre = _ckey(path) + "/"
-    for k in [
-        k
-        for k in _IVFPQ_READ_CACHE
-        if k[0] == app and (k[1] == _ckey(path) or k[1].startswith(pre))
-    ]:
-        _IVFPQ_READ_CACHE.pop(k, None)
+    invalidate_readers(spark, path)
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(path)
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -248,14 +281,14 @@ def dedup_index_dir(
     from stampede_to_fresco_etl_spark.operators.dedup import band_signatures
 
     path = f"{_scratch()}/index_store/dedup/{_key(sf_dir)}"
-    if not _already_materialized(spark, path):
-        _fresh_dir(spark, path)
-        if callable(indexed_sigs):
-            indexed_sigs = indexed_sigs()
-        band_signatures(indexed_sigs, num_hashes, bands).write.mode(
+
+    def write():
+        sigs = indexed_sigs() if callable(indexed_sigs) else indexed_sigs
+        band_signatures(sigs, num_hashes, bands).write.mode(
             "overwrite"
         ).parquet(f"{path}/batch_id=0")
-        _mark_materialized(spark, path)
+
+    materialize_once(spark, path, write)
     return path
 
 
@@ -302,8 +335,8 @@ def ann_index_dirs(
         f"{('_' + tag) if tag else ''}"
     )
     index_dir, centroids_dir = f"{base}/index", f"{base}/centroids"
-    if not _already_materialized(spark, base):
-        _fresh_dir(spark, base)
+
+    def write():
         cents = (
             [[float(x) for x in c] for c in centroids]
             if centroids is not None
@@ -333,7 +366,8 @@ def ann_index_dirs(
             )
         )
         assigned.write.mode("overwrite").parquet(f"{index_dir}/batch_id=0")
-        _mark_materialized(spark, base)
+
+    materialize_once(spark, base, write)
     return index_dir, centroids_dir
 
 
@@ -544,8 +578,8 @@ def text_index_dirs(
         f"{base}/doclen",
         f"{base}/totals",
     )
-    if not _already_materialized(spark, base):
-        _fresh_dir(spark, base)
+
+    def write():
         toks = docs.select(
             "doc_id",
             F.explode(F.split(F.trim("text"), r"\s+")).alias("token"),
@@ -578,7 +612,8 @@ def text_index_dirs(
             F.sum("dl").cast("long").alias("dl_sum"),
         ).coalesce(1).write.mode("overwrite").parquet(totals)
         write_postings_layout(spark, postings)
-        _mark_materialized(spark, base)
+
+    materialize_once(spark, base, write)
     return postings, doclen, totals
 
 
@@ -592,12 +627,14 @@ def exact_fp_dir(
     (32-byte keys; at cluster scale bucketed by fp so the probe
     shuffles only the batch side)."""
     path = f"{_scratch()}/index_store/exact_fp/{_key(sf_dir)}"
-    if not _already_materialized(spark, path):
-        _fresh_dir(spark, path)
-        indexed_docs.groupBy(F.md5("text").alias("fp")).agg(
-            F.count("*").cast("long").alias("n_docs")
-        ).write.mode("overwrite").parquet(f"{path}/batch_id=0")
-        _mark_materialized(spark, path)
+    materialize_once(
+        spark,
+        path,
+        lambda: indexed_docs.groupBy(F.md5("text").alias("fp"))
+        .agg(F.count("*").cast("long").alias("n_docs"))
+        .write.mode("overwrite")
+        .parquet(f"{path}/batch_id=0"),
+    )
     return path
 
 
@@ -626,10 +663,11 @@ def pq_codes_dir(
     ADC search (catalog v17) scans ONLY this table — at 10⁹ vectors
     the raw embeddings never leave cold storage."""
     path = f"{_scratch()}/index_store/pq_codes/{_key(sf_dir)}"
-    if not _already_materialized(spark, path):
-        _fresh_dir(spark, path)
-        codes.write.mode("overwrite").parquet(f"{path}/batch_id=0")
-        _mark_materialized(spark, path)
+    materialize_once(
+        spark,
+        path,
+        lambda: codes.write.mode("overwrite").parquet(f"{path}/batch_id=0"),
+    )
     return path
 
 
@@ -679,8 +717,8 @@ def pq_codes_index_dirs(
         f"{('_' + tag) if tag else ''}"
     )
     codes_dir, codebook_dir = f"{base}/codes", f"{base}/codebook"
-    if not _already_materialized(spark, base):
-        _fresh_dir(spark, base)
+
+    def write():
         seeds = [
             [float(x) for x in r["embedding"]]
             for r in indexed_emb.select("vec_id", "embedding")
@@ -698,7 +736,8 @@ def pq_codes_index_dirs(
             m=PQ_M,
             dims=PQ_DIMS,
         ).write.mode("overwrite").parquet(f"{codes_dir}/batch_id=0")
-        _mark_materialized(spark, base)
+
+    materialize_once(spark, base, write)
     return codes_dir, codebook_dir
 
 
@@ -731,7 +770,8 @@ def ivfpq_dir(
     layout at snapshot/compaction time, exactly like `compact_index`
     folds batch partitions."""
     path = ivfpq_path(sf_dir, n_centroids, tag)
-    if not _already_materialized(spark, path):
+
+    def write():
         (
             assigned.select("vec_id", "cell")
             .join(codes, "vec_id")
@@ -746,7 +786,8 @@ def ivfpq_dir(
             .partitionBy("cell")
             .parquet(path)
         )
-        _mark_materialized(spark, path)
+
+    materialize_once(spark, path, write, fresh=False)
     return path
 
 
@@ -819,7 +860,7 @@ def invalidate_readers(spark: SparkSession, path: str) -> None:
     pre = c + "/"
     for k in [
         k
-        for k in _IVFPQ_READ_CACHE
+        for k in list(_IVFPQ_READ_CACHE)
         if k[0] == app and (k[1] == c or k[1].startswith(pre))
     ]:
         _IVFPQ_READ_CACHE.pop(k, None)
@@ -881,7 +922,7 @@ def _invalidate_derived(spark: SparkSession, source_path: str) -> None:
     tail_ok = re.compile(r"(?:_\d+c(?:_[A-Za-z0-9_]+)?)?(?:/.*)?$")
     for k in [
         k
-        for k in _MATERIALIZED
+        for k in list(_MATERIALIZED)
         if k[0] == app
         and k[1].startswith(prefix)
         and tail_ok.fullmatch(k[1][len(prefix):])
@@ -1122,10 +1163,9 @@ def _swap_in(spark: SparkSession, live_s: str, tmp_s: str) -> None:
     delete the backup — or restore the live dir if the swap fails.
     Single-writer: call from a maintenance window only."""
     # the files under live_s are about to change — drop any cached
-    # reader (its file listing would serve the pre-swap snapshot)
-    _IVFPQ_READ_CACHE.pop(
-        (spark.sparkContext.applicationId, _ckey(live_s)), None
-    )
+    # reader of it or of a subdir (its file listing would serve the
+    # pre-swap snapshot)
+    invalidate_readers(spark, live_s)
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
     live = jvm.org.apache.hadoop.fs.Path(live_s)

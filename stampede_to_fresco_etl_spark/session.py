@@ -14,10 +14,16 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults sized for the local[32] test harness; on a real cluster the
-# submitter overrides master/shuffle partitions.  AQE re-coalesces
-# shuffle partitions at runtime, so a generous static number is safe.
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def default_cpus() -> int:
+    """$SPARK_GRAFT_CPUS, else the cores this process may run on: the
+    default local master width and shuffle partition count.  On a
+    real cluster the submitter overrides master/shuffle partitions.
+    AQE re-coalesces shuffle partitions at runtime, so a generous
+    static number is safe."""
+    return int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
 
 
 def get_spark(
@@ -37,7 +43,7 @@ def get_spark(
       - UTC session timezone: naive-timestamp determinism.
       - Arrow enabled: fast toPandas / pandas-UDF exchange.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or os.environ.get("SPARK_MASTER", f"local[{cpus}]"))
@@ -86,7 +92,7 @@ def get_spark(
         )
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cpus),
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.mergeSchema", "false")

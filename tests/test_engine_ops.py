@@ -8,8 +8,10 @@ from __future__ import annotations
 
 import duckdb
 import pandas as pd
+import pytest
+from pyspark.sql import functions as F
 
-from stampede_to_fresco_etl_spark.catalog import REGISTRY
+from stampede_to_fresco_etl_spark.catalog import REGISTRY, load
 
 SF = "/root/testdata/sf0.001"
 
@@ -101,3 +103,35 @@ def test_interval_overlap_pairs_are_attributable(spark):
         # [p-1h, p+1h) x [c-30m, c+30m) overlap (exclusive ends)
         dt_s = abs((pr["ts"] - cl["ts"]).total_seconds())
         assert dt_s < 90 * 60
+
+# Degenerate corpora for the queries whose session calibration is
+# replayed as a literal `FROM VALUES` relation: w10/w11 (per-type
+# median/MAD) and v14 (k-means iter-1 counts).  With no calibration
+# rows the literal relation has no tuples, which does not parse; each
+# query must instead return an empty result of the usual schema.
+
+
+@pytest.fixture(scope="module")
+def degenerate_sf(spark, tmp_path_factory):
+    """A corpus whose events all carry a null `value` and whose
+    embeddings table is empty (same schemas as the testdata)."""
+    d = str(tmp_path_factory.mktemp("degenerate_sf"))
+    load(spark, SF, "events").withColumn(
+        "value", F.lit(None).cast("double")
+    ).write.parquet(f"{d}/events.parquet")
+    load(spark, SF, "embeddings").limit(0).write.parquet(
+        f"{d}/embeddings.parquet"
+    )
+    return d
+
+
+@pytest.mark.parametrize(
+    "name", ["w10_mad_outliers", "w11_cusum_drift", "v14_kmeans_refine"]
+)
+def test_calibrated_query_on_degenerate_corpus_is_empty(
+    spark, degenerate_sf, name
+):
+    fn, _sql = REGISTRY[name]
+    out = fn(spark, degenerate_sf)
+    assert out.collect() == []
+    assert out.dtypes == fn(spark, SF).dtypes

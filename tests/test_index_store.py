@@ -7,11 +7,15 @@ probe kernels unchanged."""
 
 from __future__ import annotations
 
+import glob
 import shutil
+import sys
+import threading
+from types import SimpleNamespace
 
 from pyspark.sql import functions as F
 
-from stampede_to_fresco_etl_spark import index_store
+from stampede_to_fresco_etl_spark import catalog, index_store
 from stampede_to_fresco_etl_spark.catalog import (
     INGEST_IDX_BOUND,
     INGEST_SPLIT_SALT,
@@ -1781,6 +1785,27 @@ def test_read_materialized_guard_cache_lifecycle(spark, tmp_path):
     assert (app, fam) not in index_store._IVFPQ_READ_CACHE
 
 
+def test_compact_swap_drops_subtree_readers(spark, tmp_path):
+    """`_swap_in` (here a `compact_index` fold) drops cached readers of
+    SUBDIRECTORIES of the swapped dir, not just the exact path: a
+    cached listing of ``<dir>/batch_id=0`` would otherwise keep serving
+    the pre-compaction files."""
+    path = str(tmp_path / "art")
+    for b in range(2):
+        spark.range(5 * b, 5 * b + 5).write.mode("overwrite").parquet(
+            f"{path}/batch_id={b}"
+        )
+    sub = f"{path}/batch_id=0"
+    index_store._mark_materialized(spark, path)
+    cached = index_store.read_materialized(spark, sub, guard=path)
+    k = (spark.sparkContext.applicationId, index_store._ckey(sub))
+    assert index_store._IVFPQ_READ_CACHE.get(k) is cached
+
+    index_store.compact_index(spark, path)
+    assert k not in index_store._IVFPQ_READ_CACHE
+    assert index_store.read_materialized(spark, sub, guard=path).count() == 10
+
+
 def test_growth_pops_cached_readers(spark, tmp_path):
     """r13 session 2: the artifact readers (`read_exact_fp` & co) ride
     the guard-cached reader plan, and every growth verb pops the
@@ -1876,3 +1901,165 @@ def test_v16_probe_plan_memo_reuses_plan_object(spark):
         (r["new_id"], r["indexed_id"]) for r in d2.collect()
     }
     assert len(rows) > 0
+
+# ---------------------------------------------------------------------------
+# The concurrency contract `catalog.warm_shared_frames` relies on: its
+# ten builds run on separate threads, so index_store builders and cache
+# scans must be safe for concurrent callers, and the builds' jobs must
+# stay under the caller's job group.
+# ---------------------------------------------------------------------------
+
+
+def _copy_corpus(spark, dest, tables=("documents", "embeddings")) -> str:
+    """A private copy of the testdata tables: a new sf_dir, so every
+    session flag and cache keyed to it starts unset."""
+    for t in tables:
+        load(spark, SF, t).write.parquet(f"{dest}/{t}.parquet")
+    return str(dest)
+
+
+def test_concurrent_first_touch_builds_artifact_once(
+    spark, tmp_path, monkeypatch
+):
+    """Two threads first-touch one artifact: the build lock makes the
+    second wait for the first's write instead of deleting it, so the
+    tree is cleared and written once, both get the same dir, and the
+    probe equals the serial result."""
+    sf = _copy_corpus(spark, tmp_path / "sf", ("documents",))
+    docs = load(spark, sf, "documents")
+    fresh = []
+    real_fresh_dir = index_store._fresh_dir
+
+    def counting_fresh_dir(spark_, path):
+        fresh.append(path)
+        return real_fresh_dir(spark_, path)
+
+    monkeypatch.setattr(index_store, "_fresh_dir", counting_fresh_dir)
+    start = threading.Barrier(2, timeout=60)
+    dirs, errors = [], []
+
+    def touch():
+        try:
+            start.wait()
+            dirs.append(index_store.exact_fp_dir(spark, sf, docs))
+        except Exception as ex:  # surfaced by the asserts below
+            errors.append(ex)
+
+    threads = [threading.Thread(target=touch) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(dirs) == 2 and dirs[0] == dirs[1]
+    assert fresh == [dirs[0]]
+    try:
+        got = {
+            (r["fp"], r["n_docs"])
+            for r in index_store.read_exact_fp(spark, dirs[0]).collect()
+        }
+        want = {
+            (r["fp"], r["n_docs"])
+            for r in docs.groupBy(F.md5("text").alias("fp"))
+            .agg(F.count("*").cast("long").alias("n_docs"))
+            .collect()
+        }
+        assert got == want
+    finally:
+        shutil.rmtree(dirs[0], ignore_errors=True)
+
+
+def test_cache_scans_tolerate_concurrent_inserts():
+    """Four threads insert reader-cache and materialized-flag keys
+    while the scans over those dicts run; none may raise "dictionary
+    changed size during iteration", and no insert may be lost.  Pure
+    Python: the stub session carries only what the scans read."""
+    app = "concurrency-stress"
+    stub = SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app))
+    errors = []
+    n = 5000
+
+    def insert(i):
+        try:
+            for j in range(n):
+                index_store._IVFPQ_READ_CACHE[(app, f"/stress/r{i}/{j}")] = None
+                index_store._MATERIALIZED[
+                    (app, f"/stress/index_store/ivfpq/k_16c_t{i}_{j}")
+                ] = True
+        except Exception as ex:
+            errors.append(ex)
+
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    threads = [threading.Thread(target=insert, args=(i,)) for i in range(4)]
+    try:
+        for t in threads:
+            t.start()
+        while any(t.is_alive() for t in threads):
+            index_store.invalidate_readers(stub, "/stress/none")
+            index_store._mark_materialized(stub, "/stress/none")
+            index_store._invalidate_derived(
+                stub, "/stress/index_store/ann/nomatch"
+            )
+    finally:
+        for t in threads:
+            t.join(timeout=60)
+        sys.setswitchinterval(old_interval)
+        inserted = [
+            sum(1 for k in list(d) if k[0] == app)
+            for d in (index_store._IVFPQ_READ_CACHE, index_store._MATERIALIZED)
+        ]
+        for d in (index_store._IVFPQ_READ_CACHE, index_store._MATERIALIZED):
+            for k in [k for k in list(d) if k[0] == app]:
+                d.pop(k, None)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    # the scans' prefixes match none of the inserted keys
+    assert inserted == [4 * n, 4 * n + 1]
+
+
+@pytest.fixture(scope="module")
+def warmed(spark, tmp_path_factory):
+    """`warm_shared_frames` on a private corpus copy (so every build
+    really runs), called under a job group; yields the corpus dir,
+    the returned frames and the job ids with and without a group."""
+    sc = spark.sparkContext
+    sf = _copy_corpus(spark, tmp_path_factory.mktemp("warm_sf"))
+    group = "warm-shared-frames-contract"
+    ungrouped_before = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup(group, "warm_shared_frames")
+    try:
+        frames = catalog.warm_shared_frames(spark, sf)
+    finally:
+        sc._jsc.clearJobGroup()
+    ungrouped_after = set(sc.statusTracker().getJobIdsForGroup(None))
+    yield SimpleNamespace(
+        sf=sf,
+        frames=frames,
+        grouped=set(sc.statusTracker().getJobIdsForGroup(group)),
+        new_ungrouped=ungrouped_after - ungrouped_before,
+    )
+    for f in frames:
+        f.unpersist()
+    for d in glob.glob(
+        f"{index_store._scratch()}/index_store/*/{index_store._key(sf)}*"
+    ):
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_warm_returns_the_cached_shared_frames(spark, warmed):
+    app = spark.sparkContext.applicationId
+    want = [catalog._DOC_TOKEN_CACHE[(app, warmed.sf)]] + [
+        catalog._SHARED_PAIR_CACHE[(app, warmed.sf, tag)]
+        for tag in ("jac005", "jac03", "mh", "embnd")
+    ]
+    assert len(warmed.frames) == len(want)
+    assert all(got is w for got, w in zip(warmed.frames, want))
+
+
+def test_warm_jobs_run_under_the_callers_job_group(warmed):
+    """Every job of the concurrent builds inherits the caller's job
+    group: some ran under it, and none ran without a group."""
+    assert warmed.grouped
+    assert warmed.new_ungrouped == set()

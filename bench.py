@@ -11,7 +11,10 @@ materialized, nothing collected to the driver).
 Besides wall-time, each query records shuffle read/write bytes and
 input bytes+records, diffed from the Spark UI REST API's completed-
 stage totals — so a plan regression (an accidental extra Exchange)
-is visible round-over-round even when wall-time noise hides it."""
+is visible round-over-round even when wall-time noise hides it.  It
+also records how many codegen classes each timed run compiled, so a
+codegen class cache that thrashes shows as a count, not only as a
+slower run."""
 
 from __future__ import annotations
 
@@ -26,7 +29,10 @@ import urllib.request
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from stampede_to_fresco_etl_spark.catalog import REGISTRY  # noqa: E402
-from stampede_to_fresco_etl_spark.session import get_spark  # noqa: E402
+from stampede_to_fresco_etl_spark.session import (  # noqa: E402
+    codegen_compiles,
+    get_spark,
+)
 
 # CORE is FROZEN (r6, VERDICT r5 item 5): the 35-query r4-comparable
 # set.  Every round's side file reports vs_prev across the whole core,
@@ -355,6 +361,11 @@ def main() -> None:
     warmup = int(os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "1"))
     timings: dict[str, float] = {}
     io: dict[str, dict[str, int]] = {}
+    # codegen classes compiled by each TIMED run: after the warmup a
+    # query's classes should all hit the codegen class cache, so a
+    # nonzero count is a cache that thrashes or a plan whose
+    # generated code differs from run to run
+    compiles: dict[str, int] = {}
 
     def _free_blocks() -> None:
         """Unpersist every lingering transient RDD (localCheckpoint
@@ -395,9 +406,11 @@ def main() -> None:
         for _ in range(warmup):
             fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
         before = _stage_totals(spark)
+        compiled = codegen_compiles(spark)
         t0 = time.perf_counter()
         fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
         timings[name] = round(time.perf_counter() - t0, 3)
+        compiles[name] = codegen_compiles(spark) - compiled
         # status store updates async off the event bus — give it a beat
         # (outside the timer) before snapshotting
         time.sleep(0.2)
@@ -450,6 +463,7 @@ def main() -> None:
         # past ~2 kB (r8's record has parsed: null), and vs_prev dies
         # with it — the side file is written by THIS process, whole.
         "queries": timings,
+        "codegen_compiles": compiles,
     }
     if io:
         side["io"] = io

@@ -63,8 +63,6 @@ def _write_accounting(path: Path) -> None:
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession
-
     from stampede_to_fresco_etl_spark.cli import (
         _read_accounting,
         _step2_frames,
@@ -73,13 +71,10 @@ def main() -> int:
     from stampede_to_fresco_etl_spark.pipeline.step2 import run_step2
     from stampede_to_fresco_etl_spark.pipeline.step3 import finalize
     from stampede_to_fresco_etl_spark.sources.writers import write_parquet
+    from stampede_to_fresco_etl_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "24g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
+    spark = get_spark(
+        app_name="batch-chain-rehearsal", shuffle_partitions=32
     )
     spark.sparkContext.setLogLevel("ERROR")
 

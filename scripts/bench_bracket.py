@@ -48,20 +48,13 @@ def main() -> int:
     )
     names = args or DEFAULT_QUERIES
 
-    from pyspark.sql import SparkSession
-
     from stampede_to_fresco_etl_spark.catalog import (
         REGISTRY,
         warm_shared_frames,
     )
+    from stampede_to_fresco_etl_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "24g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="bench-bracket", shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")
     warm_shared_frames(spark, SF_DIR)
 

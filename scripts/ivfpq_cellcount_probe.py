@@ -26,17 +26,14 @@ sys.path.insert(
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
+
+    from stampede_to_fresco_etl_spark.session import get_spark
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/testdata_sf1"
     cells = [int(a) for a in sys.argv[2:]] or [16, 64]
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "24g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = get_spark(
+        app_name="ivfpq-cellcount-probe", shuffle_partitions=32
     )
     from stampede_to_fresco_etl_spark import index_store
     from stampede_to_fresco_etl_spark.catalog import (

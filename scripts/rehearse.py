@@ -35,9 +35,8 @@ SF1 = "/root/repo/testdata_sf1"
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession
-
     from stampede_to_fresco_etl_spark.catalog import REGISTRY
+    from stampede_to_fresco_etl_spark.session import get_spark
 
     args = sys.argv[1:]
     scaled = SF1
@@ -50,13 +49,7 @@ def main() -> int:
         return 2
     names = sorted(REGISTRY) if args == ["--all"] else args
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "24g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="rehearse", shuffle_partitions=32)
 
     def run(name: str, sf_dir: str) -> float:
         fn, _ = REGISTRY[name]

@@ -83,7 +83,7 @@ def _gen_wave(base: Path, wave: int) -> int:
 
 
 def main() -> int:
-    from pyspark.sql import Row, SparkSession
+    from pyspark.sql import Row
     from pyspark.sql import functions as F
 
     from stampede_to_fresco_etl_spark.pipeline.step2 import parse_accounting
@@ -96,13 +96,10 @@ def main() -> int:
     from stampede_to_fresco_etl_spark.streaming.step3_stream import (
         run_step3_incremental,
     )
+    from stampede_to_fresco_etl_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "24g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
+    spark = get_spark(
+        app_name="streaming-rehearsal", shuffle_partitions=32
     )
     spark.sparkContext.setLogLevel("ERROR")
 

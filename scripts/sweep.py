@@ -20,7 +20,7 @@ correctness-gate wall growth (VERDICT r10 item 6).
 connection — per-query semantics identical, only the wall changes)
 and then runs the full-registry representation lint in the parent.
 The gate's floor is per-query driver round-trips (SCALE.md r12), so
-concurrent shards buy ~1/n wall on a mostly-idle local[32] host.
+concurrent shards buy ~1/n wall on a mostly-idle host.
 
 Exit code 0 iff every swept query matches.
 """
@@ -192,17 +192,12 @@ def main() -> int:
         return _parallel_sweep(sf_dir, needles, parallel, times)
 
     import pandas as pd
-    from pyspark.sql import SparkSession
 
     import test_oracle_parity as P
     from stampede_to_fresco_etl_spark.catalog import REGISTRY
+    from stampede_to_fresco_etl_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="sweep", shuffle_partitions=32)
     P.SF_DIR = sf_dir
     names = [
         n

@@ -47,7 +47,6 @@ N = int(_args[0]) if _args else 20000
 
 def main() -> int:
     import numpy as np
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from stampede_to_fresco_etl_spark import catalog as C
@@ -55,13 +54,10 @@ def main() -> int:
     from stampede_to_fresco_etl_spark.operators.similarity import (
         exact_l2_topk_arrow,
     )
+    from stampede_to_fresco_etl_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "24g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = get_spark(
+        app_name="trained-config-probe", shuffle_partitions=32
     )
     dim = C._PQ_M * C._PQ_DIMS
     rng = np.random.default_rng(11)

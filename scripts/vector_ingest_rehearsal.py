@@ -156,14 +156,10 @@ def run_scale(spark, sf_dir: str) -> dict:
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession
+    from stampede_to_fresco_etl_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "24g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = get_spark(
+        app_name="vector-ingest-rehearsal", shuffle_partitions=32
     )
     spark.sparkContext.setLogLevel("ERROR")
     for sf_dir in SF_DIRS:

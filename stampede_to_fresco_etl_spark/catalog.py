@@ -20079,10 +20079,13 @@ def _bm25_probe(spark, postings_dir, doclen_dir, totals_dir, guard=None):
     longer outlive a within-session grow."""
     from stampede_to_fresco_etl_spark import index_store
 
-    def _read(p):
-        if guard is None:
-            return spark.read.parquet(p)
-        return index_store.read_materialized(spark, p, guard=guard)
+    def _read(p, schema=None):
+        if guard is not None:
+            return index_store.read_materialized(
+                spark, p, guard=guard, schema=schema
+            )
+        reader = spark.read
+        return (reader.schema(schema) if schema else reader).parquet(p)
 
     # layout gate (r11): refuse an artifact written under a different
     # bucket count — its token_bucket values would make the literal
@@ -20093,7 +20096,7 @@ def _bm25_probe(spark, postings_dir, doclen_dir, totals_dir, guard=None):
     # terms' bucket dirs), THEN the exact token membership inside the
     # surviving buckets (row-group stats pushdown)
     post = (
-        _read(postings_dir)
+        _read(postings_dir, index_store.POSTINGS_SCHEMA)
         .filter(
             F.col("token_bucket").isin(
                 sorted(
@@ -20478,9 +20481,16 @@ def _pq_adc_from(spark, tab, codes_dir):
         f"{_adc_sql(p)} AS adc_dist)"
         for p in probe_ids
     )
-    scored = codes.select(
-        "vec_id", F.expr(f"inline(array({structs}))")
-    ).select("probe_id", "vec_id", "adc_dist")
+    luts = (
+        f"array({structs})"
+        if probe_ids
+        # an empty corpus has no probes; a bare array() is untyped
+        else "CAST(array() AS ARRAY<STRUCT<probe_id: BIGINT, "
+        "adc_dist: DOUBLE>>)"
+    )
+    scored = codes.select("vec_id", F.expr(f"inline({luts})")).select(
+        "probe_id", "vec_id", "adc_dist"
+    )
     return partial_topk(
         scored,
         "probe_id",

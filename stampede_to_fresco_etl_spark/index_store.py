@@ -409,6 +409,15 @@ def read_ann_index(spark: SparkSession, index_dir: str) -> DataFrame:
 #: per deployment without changing probe code).
 TEXT_TOKEN_BUCKETS = 16
 
+#: The postings artifact's read schema: data columns, then the
+#: ``batch_id`` and ``token_bucket`` partition columns, as inference
+#: gives them for a non-empty tree.  An empty corpus writes a postings
+#: tree with no partition directories, which inference rejects
+#: (UNABLE_TO_INFER_SCHEMA); read with this schema it is zero rows.
+POSTINGS_SCHEMA = (
+    "token STRING, doc_id BIGINT, tf BIGINT, batch_id INT, token_bucket INT"
+)
+
 _TOKEN_BUCKET_SALT = "tokbucket"
 
 
@@ -806,7 +815,10 @@ _IVFPQ_READ_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def read_materialized(
-    spark: SparkSession, path: str, guard: str | None = None
+    spark: SparkSession,
+    path: str,
+    guard: str | None = None,
+    schema: str | None = None,
 ) -> DataFrame:
     """`spark.read.parquet(path)` with the same session reader cache
     as `read_ivfpq`, for artifact dirs whose immutability is pinned
@@ -817,13 +829,16 @@ def read_materialized(
     re-paid the per-call listing + footer-schema job for every
     family on every call.  Only the PLAN object is reused — every
     execution still scans the parquet files; a path whose guard this
-    session never built keeps the fresh-listing read."""
+    session never built keeps the fresh-listing read.  ``schema``
+    skips inference, so an artifact tree that holds no files reads as
+    zero rows instead of failing."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
     if not _already_materialized(spark, guard or path):
-        return spark.read.parquet(path)
+        return reader.parquet(path)
     k = (spark.sparkContext.applicationId, _ckey(path))
     df = _IVFPQ_READ_CACHE.get(k)
     if df is None:
-        df = spark.read.parquet(path)
+        df = reader.parquet(path)
         _IVFPQ_READ_CACHE[k] = df
     return df
 

@@ -26,6 +26,14 @@ def default_cpus() -> int:
     )
 
 
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes this JVM has compiled for generated code so far: each
+    is a miss of the codegen class cache."""
+    jvm = spark.sparkContext._jvm
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
 def get_spark(
     app_name: str = "stampede-to-fresco-etl-spark",
     master: str | None = None,
@@ -42,6 +50,14 @@ def get_spark(
         (step-2/consumer.py:556-562) and is the right codec at 100 TB.
       - UTC session timezone: naive-timestamp determinism.
       - Arrow enabled: fast toPandas / pandas-UDF exchange.
+      - codegen class cache of 8192 entries
+        (`spark.sql.codegen.cache.maxEntries`, Spark's default 100):
+        the engine's compiled classes survive from one pass to the
+        next.  At 100, a warm CORE_V2 pass recompiled 647 of its 650
+        classes; one bench.py pass compiles 1,784 distinct classes and
+        one registry pass 3,649, each after warm-up's 154.  The cache
+        is sized once per JVM, so every session of this engine is
+        built here (see the comments at the conf).
     """
     cpus = default_cpus()
     builder = (
@@ -94,6 +110,20 @@ def get_spark(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or cpus),
         )
+        # Spark keeps compiled generated classes in one JVM-wide LRU
+        # cache, 100 entries by default.  The 45 CORE_V2 queries alone
+        # compile ~650 classes, so every warm catalog pass evicted and
+        # recompiled nearly all of them (647 of 650; a warm pass took
+        # 21-22.7 s, and 12.7-13.5 s with the classes kept).  Distinct
+        # classes measured on 4 cores, after `warm_shared_frames`' 154:
+        # one pass of bench.py's 118 headline queries at sf0.1 compiles
+        # 1,784, one pass of the 305-query registry at sf0.01 3,649 (a
+        # second registry pass then compiles 112).  8192 holds the
+        # larger, 3,803 with warm-up, with headroom for Guava's
+        # per-segment LRU (4 segments of 2048).  Metaspace grew ~3 MB
+        # for the CORE_V2 working set.  A static conf: it binds once
+        # per JVM, when the cache is built (see below).
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.mergeSchema", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
@@ -102,4 +132,13 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # The codegen class cache is sized when Spark's CodeGenerator
+    # object initializes, from the conf of the session active on that
+    # JVM thread.  A thread with no active session (a py4j thread
+    # serving a Python worker thread, as in `warm_shared_frames`)
+    # sizes it from Spark's defaults, so initialize it here, on the
+    # thread that just built the session.
+    codegen = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen
+    codegen.CodeGenerator.isValidParamLength(0)
+    return spark

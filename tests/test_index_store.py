@@ -2058,6 +2058,34 @@ def test_warm_returns_the_cached_shared_frames(spark, warmed):
     assert all(got is w for got, w in zip(warmed.frames, want))
 
 
+def test_warm_succeeds_on_an_empty_corpus(spark, tmp_path):
+    """0-row `documents` and `embeddings`: every build succeeds (the
+    empty centroid and codebook literals are typed, and the empty
+    postings tree reads with an explicit schema) and every frame and
+    stored-artifact probe is empty."""
+    sf = str(tmp_path / "sf")
+    for t in ("documents", "embeddings"):
+        load(spark, SF, t).limit(0).write.parquet(f"{sf}/{t}.parquet")
+    frames = catalog.warm_shared_frames(spark, sf)
+    try:
+        assert [f.count() for f in frames] == [0] * 5
+        for name in (
+            "d15_incremental_dedup",
+            "v16_incremental_ann",
+            "x57_bm25_stored_index",
+            "d16_incremental_exact_dedup",
+            "v17_pq_adc_topk",
+        ):
+            assert REGISTRY[name][0](spark, sf).count() == 0, name
+    finally:
+        for f in frames:
+            f.unpersist()
+        for d in glob.glob(
+            f"{index_store._scratch()}/index_store/*/{index_store._key(sf)}*"
+        ):
+            shutil.rmtree(d, ignore_errors=True)
+
+
 def test_warm_jobs_run_under_the_callers_job_group(warmed):
     """Every job of the concurrent builds inherits the caller's job
     group: some ran under it, and none ran without a group."""

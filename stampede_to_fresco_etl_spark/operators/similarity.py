@@ -1099,8 +1099,8 @@ def pq_encode(
     argmin references each distance array exactly twice.  Each
     subspace's codebook is one parsed k×dims matrix literal under one
     ``transform``, and the whole projection is one ``selectExpr``:
-    the per-element ``F.lit`` tree it replaced cost ~11k py4j round
-    trips at k16 m4 d16, for identical doubles (repr round trip) and
+    a per-element ``F.lit`` tree costs a py4j round trip per node
+    (~11k at k16 m4 d16) for identical doubles (repr round trip) and
     the identical fold.
 
     In-row arithmetic throughout — no join, no shuffle, no UDF; fold

@@ -64,7 +64,7 @@ def py4j_calls(monkeypatch):
 def test_pq_codes_construction_budget(spark, py4j_calls):
     """v17's build encodes the corpus with `pq_encode` (the codes frame
     of v11).  Construction, including the codebook collect, is about
-    50 py4j calls; the per-element literal tree it replaced was ~11k."""
+    50 py4j calls; a per-element literal tree would be ~11k."""
     catalog.load(spark, SF, "embeddings")
     before = py4j_calls()
     catalog.q_pq_codes(spark, SF)
@@ -74,7 +74,7 @@ def test_pq_codes_construction_budget(spark, py4j_calls):
 
 def test_embedding_near_dups_construction_budget(spark, py4j_calls):
     """16 LSH planes of 64 dims: about 200 py4j calls with the parsed
-    `CASE WHEN` bucket sum; the per-element form was ~5.4k."""
+    `CASE WHEN` bucket sum; a per-element form would be ~5.4k."""
     emb = catalog.load(spark, SF, "embeddings")
     before = py4j_calls()
     embedding_near_dups(emb, num_planes=16)

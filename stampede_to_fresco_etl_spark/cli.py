@@ -17,9 +17,13 @@ same jobs:
 
 Each subcommand builds the tuned session (session.get_spark: UTC,
 zstd, AQE + skew-join), calls the library function, and writes
-date-partitioned zstd parquet — the CLI owns ONLY argument parsing;
-every behavior lives in the library so programmatic users get the
-identical pipeline.
+zstd parquet — the CLI owns ONLY argument parsing; every behavior
+lives in the library so programmatic users get the identical
+pipeline.  `pipeline` runs the three steps as ONE plan with one
+write: the long table is never written (run `step1` to keep it).
+`step2` and `step3` read their inputs with the declared schemas
+(FRESCO_LONG, WIDE_OUTPUT), so an upstream step that wrote no rows
+hands over an empty table, not a schema-inference error.
 """
 
 from __future__ import annotations
@@ -86,10 +90,9 @@ def _read_accounting(spark, path: str):
     return read_csv_robust(spark, path, ACCOUNTING_RAW)
 
 
-def _step2_frames(spark, metrics_path: str, accounting_path: str, window):
+def _step2_frames(spark, metrics, accounting_path: str, window):
     from stampede_to_fresco_etl_spark.pipeline.step2 import run_step2
 
-    metrics = spark.read.parquet(metrics_path)
     acct = _read_accounting(spark, accounting_path)
     kw = {} if window is None else {"window_sec": window}
     return run_step2(metrics, acct, **kw)
@@ -106,27 +109,26 @@ def main(argv: list[str] | None = None) -> int:
 
         run_step1(spark, args.input, args.output)
     elif args.cmd == "step2":
-        out = _step2_frames(
-            spark, args.metrics, args.accounting, args.window_sec
-        )
+        from stampede_to_fresco_etl_spark.schemas import FRESCO_LONG
+
+        metrics = spark.read.schema(FRESCO_LONG).parquet(args.metrics)
+        out = _step2_frames(spark, metrics, args.accounting, args.window_sec)
         write_parquet(out, args.output)
     elif args.cmd == "step3":
         from stampede_to_fresco_etl_spark.pipeline.step3 import finalize
+        from stampede_to_fresco_etl_spark.schemas import WIDE_OUTPUT
 
-        write_parquet(finalize(spark.read.parquet(args.input)), args.output)
+        wide = spark.read.schema(WIDE_OUTPUT).parquet(args.input)
+        write_parquet(finalize(wide), args.output)
     elif args.cmd == "pipeline":
-        import tempfile
-
         from stampede_to_fresco_etl_spark.pipeline.step1 import run_step1
         from stampede_to_fresco_etl_spark.pipeline.step3 import finalize
 
-        with tempfile.TemporaryDirectory(prefix="s2f_step1_") as tmp:
-            long_dir = f"{tmp}/fresco_long"
-            run_step1(spark, args.input, long_dir)
-            out = _step2_frames(
-                spark, long_dir, args.accounting, args.window_sec
-            )
-            write_parquet(finalize(out), args.output)
+        out = _step2_frames(
+            spark, run_step1(spark, args.input), args.accounting,
+            args.window_sec,
+        )
+        write_parquet(finalize(out), args.output)
     elif args.cmd == "stream":
         from stampede_to_fresco_etl_spark.streaming.ingest import (
             run_incremental_pipeline,

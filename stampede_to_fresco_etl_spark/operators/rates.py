@@ -49,13 +49,12 @@ def lag_deltas(
     w = Window.partitionBy(*partition_cols).orderBy(
         *(order_cols or [ts_col])
     )
-    out = df
-    for c in value_cols:
-        out = out.withColumn(c + suffix, F.col(c) - F.lag(c).over(w))
-    out = out.withColumn(
-        dt_col, seconds_between(F.col(ts_col), F.lag(ts_col).over(w))
+    return df.withColumns(
+        {
+            **{c + suffix: F.col(c) - F.lag(c).over(w) for c in value_cols},
+            dt_col: seconds_between(F.col(ts_col), F.lag(ts_col).over(w)),
+        }
     )
-    return out
 
 
 def valid_rate_rows(

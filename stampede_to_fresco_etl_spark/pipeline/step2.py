@@ -7,10 +7,13 @@ shape (SURVEY §3.2): ONE declarative plan:
 
     metrics ⋈ broadcast(accounting)  on jid + [start, end)
       → job-aligned 1-min buckets, clamped, μs-floor midpoint
-      → groupBy(job × host × bucket × Event).mean(Value)
-      → pivot(Event → value_*) with fixed event list
-      → host_list / enrichment columns
+      → groupBy(job × host × bucket).agg(value_<e> = mean of Value
+        over the rows whose Event is e, for the fixed event list)
+      → host_list window / enrichment columns
       → select(OUTPUT_COLUMNS)
+
+The widen is ONE aggregate of conditional means, not a mean per
+(key, Event) followed by a pivot: one shuffle instead of two.
 
 Catalyst plans pushdown + broadcast-hash; executors replace the
 thread/batch machinery; `write.partitionBy(month)` replaces the
@@ -19,7 +22,9 @@ manifest shuttle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from stampede_to_fresco_etl_spark.functions import (
@@ -29,10 +34,7 @@ from stampede_to_fresco_etl_spark.functions import (
 from stampede_to_fresco_etl_spark.operators.interval_join import (
     join_metrics_to_accounting,
 )
-from stampede_to_fresco_etl_spark.operators.pivot import (
-    pivot_events,
-    with_null_column,
-)
+from stampede_to_fresco_etl_spark.operators.pivot import with_null_column
 from stampede_to_fresco_etl_spark.operators.windows import (
     DEFAULT_WINDOW_SECONDS,
     with_job_aligned_window,
@@ -55,14 +57,35 @@ def parse_accounting(raw: DataFrame) -> DataFrame:
     return df.dropna(subset=["jobID", "start", "end", "submit"])
 
 
+#: the wide table's grouping key, as (source column, output name)
+#: pairs (consumer.py:428-430)
+_KEY_SOURCES = [
+    ("jid", "jid"),
+    ("Host", "host"),
+    ("time", "time"),
+    ("submit", "submit_time"),
+    ("start", "start_time"),
+    ("end", "end_time"),
+    ("walltime", "timelimit"),
+    ("nnodes", "nhosts"),
+    ("ncpus", "ncores"),
+    ("account", "account"),
+    ("queue", "queue"),
+    ("jobname", "jobname"),
+    ("exit_status", "exitcode"),
+    ("user", "username"),
+]
+_WIDE_KEY = [name for _, name in _KEY_SOURCES]
+
+
 def _bucketed(
     metrics: DataFrame,
     accounting: DataFrame,
     window_sec: int = DEFAULT_WINDOW_SECONDS,
-):
-    """metrics ⋈ accounting → job-aligned clamped buckets, grouped by
-    the full wide-table key + Event — the shared front half of the
-    batch plan and the per-micro-batch partial aggregation."""
+) -> DataFrame:
+    """metrics ⋈ accounting → job-aligned clamped buckets, projected
+    to the wide-table key + Event + Value — the shared front half of
+    the batch plan and the per-micro-batch partial aggregation."""
     joined = join_metrics_to_accounting(metrics, accounting)
 
     # Job-aligned tumbling buckets clamped to job end; midpoint time
@@ -74,24 +97,10 @@ def _bucketed(
         end_col="end",
         duration_sec=window_sec,
     )
-
-    # group per (job, host, bucket, Event) (consumer.py:428-430).
-    return joined.groupBy(
-        "jid",
-        F.col("Host").alias("host"),
-        "time",
-        F.col("submit").alias("submit_time"),
-        F.col("start").alias("start_time"),
-        F.col("end").alias("end_time"),
-        F.col("walltime").alias("timelimit"),
-        F.col("nnodes").alias("nhosts"),
-        F.col("ncpus").alias("ncores"),
-        "account",
-        "queue",
-        F.col("jobname").alias("jobname"),
-        F.col("exit_status").alias("exitcode"),
-        F.col("user").alias("username"),
+    return joined.select(
+        *[F.col(src).alias(name) for src, name in _KEY_SOURCES],
         "Event",
+        "Value",
     )
 
 
@@ -105,9 +114,13 @@ def partial_step2(
     batches, sum/count is — this is the state a streaming/incremental
     maintainer carries (streaming/step2_stream.py), and two partial
     frames merge exactly via `merge_partials`."""
-    return _bucketed(metrics, accounting, window_sec).agg(
-        F.sum("Value").alias("sum_value"),
-        F.count("Value").alias("n_value"),
+    return (
+        _bucketed(metrics, accounting, window_sec)
+        .groupBy(*_WIDE_KEY, "Event")
+        .agg(
+            F.sum("Value").alias("sum_value"),
+            F.count("Value").alias("n_value"),
+        )
     )
 
 
@@ -123,14 +136,20 @@ def merge_partials(*partials: DataFrame) -> DataFrame:
     )
 
 
+def _of_event(event: str, col: str) -> Column:
+    """`col` on the rows whose Event is `event`, null elsewhere."""
+    return F.when(F.col("Event") == event, F.col(col))
+
+
 def finish_step2(partials: DataFrame) -> DataFrame:
-    """Back half of the step-2 plan from partial aggregates: mean =
-    sum/n, pivot, value_gpu, host_list, output projection."""
-    agg = partials.select(
-        *[c for c in partials.columns if c not in ("sum_value", "n_value")],
-        (F.col("sum_value") / F.col("n_value")).alias("avg_value"),
+    """Back half of the step-2 plan from partial aggregates: per wide
+    key, value_<e> = Σ sum_value / Σ n_value over event e's rows, then
+    host_list and the output projection."""
+    return _widen(
+        partials,
+        lambda e: F.sum(_of_event(e, "sum_value"))
+        / F.sum(_of_event(e, "n_value")),
     )
-    return _widen(agg)
 
 
 def join_and_widen(
@@ -139,17 +158,20 @@ def join_and_widen(
     window_sec: int = DEFAULT_WINDOW_SECONDS,
 ) -> DataFrame:
     """The whole step-2 dataflow as one plan (consumer.py:295-591)."""
-    agg = _bucketed(metrics, accounting, window_sec).agg(
-        F.avg("Value").alias("avg_value")
+    return _widen(
+        _bucketed(metrics, accounting, window_sec),
+        lambda e: F.avg(_of_event(e, "Value")),
     )
-    return _widen(agg)
 
 
-def _widen(agg: DataFrame) -> DataFrame:
-    # Pivot with the fixed 5-event list; value_gpu always null
-    # (consumer.py:438-442,483-491).
-    keys = [c for c in agg.columns if c not in ("Event", "avg_value")]
-    wide = pivot_events(agg, keys, events=FRESCO_EVENTS)
+def _widen(rows: DataFrame, mean_of: Callable[[str], Column]) -> DataFrame:
+    """One aggregate by the wide key: value_<e> = mean_of(e) for the
+    fixed 5-event list — an event with no rows in a group is null, as
+    the reference's backfilled pivot columns are; value_gpu is always
+    null (consumer.py:438-442,483-491)."""
+    wide = rows.groupBy(*_WIDE_KEY).agg(
+        *[mean_of(e).alias(f"value_{e}") for e in FRESCO_EVENTS]
+    )
     wide = with_null_column(wide, "value_gpu", "double")
 
     # host_list: sorted unique hosts of the JOB RECORD, attached to

@@ -57,11 +57,19 @@ def write_parquet(
     within-partition sort (keeps (job,node,ts) runs contiguous so
     downstream window shuffles read pre-clustered data —
     step-1/transformer.py:323; step-2/consumer.py:556-562).  Appends
-    are schema-guarded (SchemaMismatchError on column-set drift)."""
+    are schema-guarded (SchemaMismatchError on column-set drift).
+
+    A partitioned write needs its rows ordered by the partition
+    columns; Spark plans that as a sort of its own, which replaces a
+    sort by other keys.  So the partition columns lead the requested
+    sort: the write's ordering is then already met, and every file
+    keeps the requested order."""
     if mode == "append":
         _check_append_schema(df, path)
     if sort_within_partitions:
-        df = df.sortWithinPartitions(*sort_within_partitions)
+        df = df.sortWithinPartitions(
+            *(partition_by or []), *sort_within_partitions
+        )
     writer = df.write.mode(mode).option("compression", compression)
     if partition_by:
         writer = writer.partitionBy(*partition_by)

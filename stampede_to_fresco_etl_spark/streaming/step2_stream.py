@@ -11,7 +11,7 @@ This module is that dataflow as Structured Streaming:
          (sum, n) per wide-key × Event         batch plan's front half)
       2. merge with the previous state        additive merge — mean
          snapshot, write state v{batchId}      itself is NOT mergeable
-      3. finish_step2(state ∩ touched jobs)   pivot + host_list
+      3. finish_step2(state ∩ touched jobs)   widen + host_list
       4. dynamic partition overwrite of ONLY  the streaming twin of
          the touched months in the wide table  the reference's monthly
                                                file rewrites
@@ -44,7 +44,7 @@ Scale notes (100 TB / 1000 executors):
     reopens the month it lands in PLUS any neighbor month a touched
     job spans (host_list is a per-job cross-month column; rewriting
     only the batch's own months would leave a spanning job's earlier
-    month stale).  The re-pivot is scoped to touched JOBS (all their
+    month stale).  The re-widen is scoped to touched JOBS (all their
     buckets) rather than slicing the state by month.
   - accounting is the small dimension: broadcast per batch, exactly
     like the batch plan.
@@ -206,7 +206,7 @@ def apply_step2_batch(
     if not months:
         return
 
-    # scope the re-pivot to touched JOBS — every bucket of a job whose
+    # scope the re-widen to touched JOBS — every bucket of a job whose
     # record intersects a touched month, so host_list sees the job's
     # full host set even across a month boundary — then write only the
     # touched months

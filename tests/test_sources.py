@@ -111,6 +111,33 @@ def test_partitioned_zstd_write_and_append(spark, tmp_path):
     ]
 
 
+def test_partitioned_write_keeps_requested_sort(spark, tmp_path):
+    """With both partition_by and sort_within_partitions, each written
+    file is in the requested order (Spark's own sort by the partition
+    column must not replace it)."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    rows = [
+        Row(k=(i * 37) % 101, t=(i * 13) % 7, date=f"2013-03-0{1 + i % 2}")
+        for i in range(400)
+    ]
+    out = str(tmp_path / "sorted")
+    write_parquet(
+        spark.createDataFrame(rows).repartition(2),
+        out,
+        partition_by=["date"],
+        sort_within_partitions=["k", "t"],
+    )
+    files = sorted(glob.glob(f"{out}/date=*/*.parquet"))
+    assert files
+    for f in files:
+        got = pq.read_table(f).select(["k", "t"]).to_pylist()
+        keys = [(r["k"], r["t"]) for r in got]
+        assert keys == sorted(keys), f
+
+
 def test_compact_parquet_preserves_data_and_reduces_files(spark, tmp_path):
     import glob
 
